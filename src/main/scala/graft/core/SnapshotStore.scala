@@ -209,6 +209,22 @@ object SnapshotStore {
       }
     }
 
+  /** Whether `root` holds a parquet file, up to two partition levels
+    * down, that Spark's discovery would SEE: Hadoop globs match hidden
+    * (`.`/`_`) components, discovery skips them. Only the components
+    * BELOW `root` count — the globbed paths come back scheme-qualified, so
+    * `root` is qualified before it is stripped off (a store under a
+    * `.x` or `_x` directory is not hidden). */
+  private[graft] def hasVisibleParquet(fs: FileSystem, root: Path): Boolean = {
+    val q = fs.makeQualified(root)
+    val prefix = q.toString
+    Seq("*.parquet", "*/*.parquet", "*/*/*.parquet").exists(g =>
+      Option(fs.globStatus(new Path(q, g))).exists(_.exists { st =>
+        !st.getPath.toString.stripPrefix(prefix).split("/").exists(c =>
+          c.startsWith(".") || c.startsWith("_"))
+      }))
+  }
+
   private def hasParquetFile(fs: FileSystem, dir: Path): Boolean =
     fs.listStatus(dir).exists(f =>
       f.isFile && f.getPath.getName.endsWith(".parquet"))
@@ -370,13 +386,7 @@ object SnapshotStore {
       // component (a `.staging-*` leaked by a crashed or lease-rejected
       // publish) must not flip an otherwise-empty table to Plain — the
       // read would fail schema inference on zero visible files
-      val rootStr = rootPath.toString
-      val anyFile = Seq("*.parquet", "*/*.parquet", "*/*/*.parquet").exists(g =>
-        Option(fs.globStatus(new Path(rootPath, g))).exists(_.exists { st =>
-          !st.getPath.toString.stripPrefix(rootStr).split("/").exists(c =>
-            c.startsWith(".") || c.startsWith("_"))
-        }))
-      return if (anyFile) Plain else Absent
+      return if (hasVisibleParquet(fs, rootPath)) Plain else Absent
     }
     val selected = days match {
       case None => all

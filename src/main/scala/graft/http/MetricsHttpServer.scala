@@ -20,8 +20,9 @@ import java.util.concurrent.atomic.AtomicLong
   * route table `HttpMetricDataQueryServer.java:70-86`) re-expressed as a
   * thin JDK `HttpServer` in front of the LIBRARY API. Deliberately a
   * facade: every data operation is the same call the gate queries prove —
-  * [[IngestStream.parseJsonTyped]]/[[IngestStream.processTypedBatch]] for
-  * writes, [[MetricsQueryApi]] stored reads (kind-routed exactly like the
+  * [[IngestStream.parseJsonTyped]]/[[IngestStream.validExpr]] (evaluated
+  * on the driver, [[graft.streaming.TypedPost]]) for writes,
+  * [[MetricsQueryApi]] stored reads (kind-routed exactly like the
   * reference's rollup_type dispatch, `MetricsRWDelegator.java:79-113`),
   * [[Discovery]] for search — so HTTP adds routing, per-record error
   * responses, and status-code semantics, never a second data path.
@@ -194,20 +195,24 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
   /** Dedicated request-sized ingest session (same SparkContext, own
     * SQLConf, AQE off + 1 shuffle partition pinned for life —
     * [[IngestStream.newIngestSession]]): every ingest body parses and
-    * every fused write plans HERE, so concurrent reads and the deferred
+    * every ingest write runs HERE, so concurrent reads and the deferred
     * drain — which use the shared `spark` — always plan with the session
     * defaults. Before this, the fused paths set/restored the confs on the
     * shared session, silently collapsing any read planned during an
     * in-flight POST to one reducer with no AQE. */
   private val ingestSpark = IngestStream.newIngestSession(spark)
 
+  /** Driver-side parser of typed ingest bodies, resolved once against the
+    * ingest session. */
+  private val typedParser = new graft.streaming.TypedPost.Parser(ingestSpark)
+
   /** Test seam: invoked INSIDE [[writeLock]] while an ingest POST is in
-    * flight, before its fused write — IsolatedIngestSessionSpec plans a
+    * flight, before its write — IsolatedIngestSessionSpec plans a
     * concurrent-read-shaped query on the shared session here and asserts
     * it sees the session defaults (AQE on, default shuffle partitions). */
   private[graft] var midIngestProbe: () => Unit = () => ()
 
-  /** Test seam: fired inside the fused paths' `onDirtyDays` callback
+  /** Test seam: fired inside the ingest paths' `onDirtyDays` callback
     * AFTER the durable marker and the in-memory pend, i.e. strictly
     * BEFORE the batch's commit rename — DeferredRollupSpec asserts the
     * pend-before-visibility ordering through it. */
@@ -599,101 +604,73 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
 
   // ---- ingest ------------------------------------------------------------
 
-  /** Reference wire shape → canonical engine lines, SPARK-side: the body
-    * array parses once with `metricValue` as a VARIANT so the original
-    * JSON type survives (a quoted "007" stays a string metric, exactly the
-    * reference's Object-typed routing, Metric.java:38-61), then each
-    * record re-renders as one canonical JSON line for
-    * [[IngestStream.parseJsonTyped]]. */
+  /** The typed route, with ZERO Spark jobs in deferred mode: the body is
+    * parsed and validated on the driver by the Spark pipeline's own
+    * expressions ([[graft.streaming.TypedPost.Parser]] — `metricValue`
+    * read as a VARIANT so a quoted "007" stays a string metric, the
+    * reference's Object-typed routing, Metric.java:38-61) and committed
+    * by [[IngestStream.commitTypedPost]]'s driver-local writes; the
+    * durable dirty-day markers land BEFORE the batch becomes visible, and
+    * always before the 200. */
   private def ingest(ex: HttpExchange, tenant: String, scoped: Boolean): Unit = {
     val body = readBody(ex)
-    val lines =
-      try {
-        // parsed on the DEDICATED ingest session: the whole fused write
-        // (and the sync-mode re-roll) plans on pinned request-sized confs
-        // without ever touching the readers' session
-        import ingestSpark.implicits._
-        val recs = Seq(body).toDF("body")
-          .select(explode(from_json(col("body"),
-            org.apache.spark.sql.types.DataType.fromDDL(
-              "array<struct<tenantId:string, metricName:string, " +
-                "metricValue:variant, collectionTime:bigint, " +
-                "ttlInSeconds:int, unit:string>>"))).as("r"))
-        recs.select(to_json(struct(
-          (if (scoped) coalesce(col("r.tenantId"), lit(tenant))
-           else lit(tenant)).as("tenant_id"),
-          col("r.metricName").as("metric_name"),
-          col("r.collectionTime").as("ts_ms"),
-          col("r.metricValue").as("value"),
-          col("r.ttlInSeconds").as("ttl_seconds"),
-          col("r.unit").as("unit"))).as("value"))
-      } catch {
-        // NonFatal only: the plan building is lazy, so genuinely bad JSON
-        // surfaces as zero parsed rows below, and an OOM/VM error here
-        // must propagate, not masquerade as a client 400
-        case scala.util.control.NonFatal(_) =>
-          sendJson(ex, 400, errJson("Cannot parse content")); return
+    val now = nowMs()
+    val (lo, hi) = IngestStream.batchBounds(0L, Long.MaxValue,
+      Some(maxAgeMs), Some(maxFutureMs), now)
+    val post =
+      try typedParser.parse(body, tenant, scoped, lo, hi)
+      catch {
+        // an evaluation failure is a server fault (500), as it was when
+        // the same expressions failed inside a Spark task — never a 400
+        case scala.util.control.NonFatal(e) =>
+          throw new IllegalStateException("typed ingest parse failed", e)
       }
-    val parsed = IngestStream.parseJsonTyped(lines)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val now = nowMs()
-      val (lo, hi) = IngestStream.batchBounds(0L, Long.MaxValue,
-        Some(maxAgeMs), Some(maxFutureMs), now)
-      // ONE Spark job per clean numeric POST: the whole accounting
-      // (total, error array, per-arm splits, dirty days, catalog
-      // locators) rides the staged raw write as observed metrics
-      // (processTypedBatchFused); the durable dirty-day markers land via
-      // the onDirtyDays callback BEFORE the batch becomes visible, and
-      // always before the 200
-      var res: IngestStream.FusedIngestResult = null
-      writeLock.synchronized {
-       graft.core.WriterLease.withLease(writerLease) {
-        midIngestProbe()
-        // a failed batch needs no compensation here: inside the fused
-        // path the durable marker write is ordered BEFORE the data
-        // commit, so a crash/throw leaves at worst a marker that
-        // over-approximates — the next drain/restart reconciles
-        res = IngestStream.processTypedBatchFused(parsed, storeDir,
-          requestBatchId(tenant, "ingest", body), lo, hi,
-          rollup = !deferRollups,
-          virginHint = if (storeKnownNonVirgin) Some(false) else None,
-          onDirtyDays = days => if (deferRollups && days.nonEmpty) {
-            // durable marker AND in-memory pend both land BEFORE the
-            // commit rename makes data visible: serving is exact for
-            // ACKNOWLEDGED ingests, and even the unacknowledged tail of
-            // this POST is never visible-but-unpended (rollNow's snapshot
-            // takes writeLock, so it cannot observe the pend without
-            // also observing the renamed data)
-            graft.core.DirtyDayLog.mark(spark, storeDir, "basic",
-              days.filterNot(pendingBasicDays.containsKey))
-            days.foreach(d =>
-              pendingBasicDays.put(d, dirtySeq.incrementAndGet()))
-            onDirtyDaysHook(days)
-          })
-        if (res.errors.length.toLong < res.nTotal) storeKnownNonVirgin = true
-        familyCache.clear() // new data may give a locator its first family
-        storeGeneration.incrementAndGet()
-       }
+    if (post.nTotal == 0) {
+      sendJson(ex, 400, errJson("Cannot parse content")); return
+    }
+    writeLock.synchronized {
+     graft.core.WriterLease.withLease(writerLease) {
+      midIngestProbe()
+      // a failed batch needs no compensation here: the durable marker
+      // write is ordered BEFORE the data commit, so a crash/throw leaves
+      // at worst a marker that over-approximates — the next drain/restart
+      // reconciles
+      IngestStream.commitTypedPost(ingestSpark, post, storeDir,
+        requestBatchId(tenant, "ingest", body),
+        rollup = !deferRollups,
+        virginHint = if (storeKnownNonVirgin) Some(false) else None,
+        onDirtyDays = days => if (deferRollups && days.nonEmpty) {
+          // durable marker AND in-memory pend both land BEFORE the
+          // commit rename makes data visible: serving is exact for
+          // ACKNOWLEDGED ingests, and even the unacknowledged tail of
+          // this POST is never visible-but-unpended (rollNow's snapshot
+          // takes writeLock, so it cannot observe the pend without
+          // also observing the renamed data)
+          graft.core.DirtyDayLog.mark(spark, storeDir, "basic",
+            days.filterNot(pendingBasicDays.containsKey))
+          days.foreach(d =>
+            pendingBasicDays.put(d, dirtySeq.incrementAndGet()))
+          onDirtyDaysHook(days)
+        })
+      if (post.errors.length.toLong < post.nTotal) storeKnownNonVirgin = true
+      familyCache.clear() // new data may give a locator its first family
+      storeGeneration.incrementAndGet()
+     }
+    }
+    val errors = post.errors.map { case (t0, n0, source, ts) =>
+      val msg = source match {
+        case "metricName" => "may not be empty"
+        case "metricValue" => "is not a valid number"
+        case "collectionTime" =>
+          s"out of bounds: must be within [$lo, $hi]"
+        case _ => "must be positive"
       }
-      if (res.nTotal == 0) {
-        sendJson(ex, 400, errJson("Cannot parse content")); return
-      }
-      val errors = res.errors.map { case (t0, n0, source, ts) =>
-        val msg = source match {
-          case "metricName" => "may not be empty"
-          case "metricValue" => "is not a valid number"
-          case "collectionTime" =>
-            s"out of bounds: must be within [$lo, $hi]"
-          case _ => "must be positive"
-        }
-        (t0, n0, source, msg, ts)
-      }
-      if (errors.length.toLong == res.nTotal)
-        sendJson(ex, 400, errorsJson(errors))
-      else if (errors.nonEmpty) sendJson(ex, 207, errorsJson(errors))
-      else sendJson(ex, 200, """{}""")
-    } finally parsed.unpersist()
+      (t0, n0, source, msg, ts)
+    }
+    if (errors.length.toLong == post.nTotal)
+      sendJson(ex, 400, errorsJson(errors))
+    else if (errors.nonEmpty) sendJson(ex, 207, errorsJson(errors))
+    else sendJson(ex, 200, """{}""")
   }
 
   private def ingestAggregated(ex: HttpExchange, tenant: String,
@@ -717,8 +694,8 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
       val now = nowMs()
       val (lo, hi) = IngestStream.batchBounds(0L, Long.MaxValue,
         Some(maxAgeMs), Some(maxFutureMs), now)
-      // ONE Spark job per clean statsd POST — the typed route's fused
-      // discipline (processAggregatedBatchFused): accounting + rejects +
+      // ONE Spark job per clean statsd POST (processAggregatedBatchFused):
+      // accounting + rejects +
       // dirty days + per-kind catalog locators ride the staged
       // preagg_raw write; durable markers land before visibility
       var res: IngestStream.FusedPreaggResult = null
@@ -780,7 +757,7 @@ final class MetricsHttpServer(spark: SparkSession, storeDir: String,
     val validated = IngestStream.withEventValidity(parsed, lo, hi)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // ONE Spark job (the other routes' fused discipline): the validity
+      // ONE Spark job (processEventsBatchFused): the validity
       // counts ride the staged events write; any invalid event discards
       // the hidden staging — the all-or-nothing 400 contract unchanged
       var counts: (Long, Long) = null

@@ -212,9 +212,9 @@ object Retention {
     * strays are left untouched). */
   /** Delete crashed ingest attempts' hidden `.staging-*` dirs under a
     * batch-dir table once older than `graceMs` (default 24 h by dir
-    * mtime against wall time). The fused ingest paths commit a staged
-    * write by one rename ([[graft.streaming.IngestStream
-    * .processTypedBatchFused]]) and a retried batch id reclaims its own
+    * mtime against wall time). The ingest paths commit a staged write by
+    * one rename ([[graft.streaming.IngestStream.commitTypedPost]],
+    * [[graft.core.LocalParquet.commit]]) and a retried batch id reclaims its own
     * leak; this sweeps the leaks whose request never retried. Invisible
     * to every reader (dot prefix), so the sweep is always safe — the
     * grace only protects a LIVE writer's in-flight staging. Returns the

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import graft.core.{Granularity, Instrumentation, Tables}
+import graft.core.{Granularity, Instrumentation, LocalParquet, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -83,11 +84,18 @@ object IngestStream {
     * EpochRangeValidator; epoch window of ±3h around processing time by
     * default in the reference — here parameterized). */
   /** The validity predicate over an explicit value column — shared by
-    * [[withValidity]] and the facade's fused accounting aggregate, so the
-    * engine's valid/errors split and a caller-computed stats hint can
-    * never disagree. */
+    * [[withValidity]] and the facade's driver-side typed parser
+    * ([[TypedPost.Parser]]), so the engine's valid/errors split and a
+    * POST's error array can never disagree. */
   private[graft] def validExpr(value: org.apache.spark.sql.Column,
       minTs: Long, maxTs: Long): org.apache.spark.sql.Column =
+    validExpr(value, lit(minTs), lit(maxTs))
+
+  /** [[validExpr]] with the epoch bounds as columns (the driver-side
+    * typed POST parser binds them per request, see [[TypedPost.Parser]]). */
+  private[graft] def validExpr(value: org.apache.spark.sql.Column,
+      minTs: org.apache.spark.sql.Column,
+      maxTs: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     // coalesce: a NULL field (e.g. missing ts_ms) must yield valid=false,
     // not NULL — under three-valued logic a NULL flag would drop the
     // record from BOTH the valid store and the errors sink
@@ -158,14 +166,10 @@ object IngestStream {
   def processTypedBatch(batch: DataFrame, storeDir: String, batchId: Long = 0L,
       minTs: Long = 0L, maxTs: Long = Long.MaxValue,
       rollup: Boolean = true,
-      virginHint: Option[Boolean] = None,
-      accounting: Option[TypedAccounting] = None): Seq[Long] = {
+      virginHint: Option[Boolean] = None): Seq[Long] = {
     val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // a caller-supplied accounting (the facade's fused aggregate, which
-      // already materialized the cache) answers emptiness without a job
-      if (accounting.fold(cached.isEmpty)(a =>
-          a.numericStats.isEmpty && a.stringStats.isEmpty)) return Nil
+      if (cached.isEmpty) return Nil
       // probed BEFORE any of this batch's writes: a first batch on an
       // empty store makes the catalog complete-from-birth. The hint lets
       // a caller that KNOWS the store state (the facade after its first
@@ -184,13 +188,7 @@ object IngestStream {
           col("value_num").as("value"), col("ttl_seconds"), col("unit"))
       val dirtyDays = processBatch(
         withValidity(numeric, minTs, maxTs), storeDir, batchId,
-        meterBatch = false, virginHint = Some(virgin), rollup = rollup,
-        statsHint = accounting.map(_.numericStats),
-        locatorsHint = accounting.flatMap(_.numericLocators)
-          .map(dedupLocators("basic", _)))
-      // a fused accounting also covers the string arm: an all-numeric
-      // batch skips the string accounting job entirely
-      if (accounting.exists(_.stringStats.values.sum == 0L)) return dirtyDays
+        meterBatch = false, virginHint = Some(virgin), rollup = rollup)
       val strings = withValidity(
         cached.filter(isStringKind)
           .select(col("tenant_id"), col("metric_name"), col("ts_ms"),
@@ -198,9 +196,8 @@ object IngestStream {
         minTs, maxTs)
         .withColumnRenamed("value", "value_str")
       // one accounting aggregate for the string arm too (see processBatch)
-      val sstats = accounting.map(_.stringStats).getOrElse(
-        strings.groupBy(col("valid")).count().collect()
-          .map(r => (r.getBoolean(0), r.getLong(1))).toMap)
+      val sstats = strings.groupBy(col("valid")).count().collect()
+        .map(r => (r.getBoolean(0), r.getLong(1))).toMap
       if (sstats.isEmpty) return dirtyDays
       val nBadStrings = sstats.getOrElse(false, 0L)
       if (nBadStrings > 0) {
@@ -216,9 +213,7 @@ object IngestStream {
       // catalog before data (see processBatch's crash-ordering note)
       writeCatalog(goodStrings, storeDir, batchId, src = "string",
         familyCol = lit("string"), markComplete = virgin,
-        rowCountHint = Some(nGoodStrings),
-        locatorsHint = accounting.flatMap(_.stringLocators)
-          .map(dedupLocators("string", _)))
+        rowCountHint = Some(nGoodStrings))
       goodStrings.withColumn("ts_day", dayOf(col("ts_ms")))
         .write.mode("overwrite").partitionBy("ts_day")
         .parquet(s"$storeDir/metrics_string/batch_id=$batchId")
@@ -226,199 +221,73 @@ object IngestStream {
     } finally cached.unpersist()
   }
 
-  private def dayOf(c: org.apache.spark.sql.Column) = c - pmod(c, lit(86400000L))
+  private[streaming] def dayOf(c: org.apache.spark.sql.Column) =
+    c - pmod(c, lit(86400000L))
 
-  /** Everything a synchronous ingest request needs back from
-    * [[processTypedBatchFused]]: the dirty days, the per-record error
-    * rows (tenant, name, failing source field, ts — the reference's
-    * bean-validation array, ErrorResponse.java), and the batch total. */
-  final case class FusedIngestResult(
-      dirtyDays: Seq[Long],
-      errors: Array[(String, String, String, Option[Long])],
-      nTotal: Long)
-
-  /** ONE-JOB typed ingest — the request-sized HTTP POST path taken to its
-    * floor: the WHOLE per-request accounting (batch total, per-arm
-    * valid/invalid splits, dirty-day set, catalog locator sets, AND the
-    * per-record error rows) rides the staged numeric raw write as
-    * `Dataset.observe` metrics, so a clean numeric POST costs exactly one
-    * Spark action in deferred mode (plus the dirty-day re-roll in
-    * synchronous mode). Additional actions run only when their data
-    * exists: an errors-sink write per arm with rejects, the
-    * `metrics_string` writes when the POST carries string/bool values, a
-    * tiny catalog write when the memo sees new locators.
+  /** Commit one driver-parsed typed POST ([[TypedPost.Parser]]) with
+    * ZERO Spark jobs in deferred mode: every file is written on the
+    * driver by [[graft.core.LocalParquet]], and only the synchronous
+    * mode's dirty-day re-roll (`rollup = true`) runs a job. Returns the
+    * dirty days of the committed numeric rows.
     *
-    * Ordering (the crash contract, strictly stronger than the classic
-    * path's): staged write (hidden) → `onDirtyDays` callback (the
-    * facade's durable marker write) → catalog commit → ONE atomic rename
-    * unhides the batch → re-roll. A crash anywhere leaves either nothing
-    * visible, or markers/catalog that over-approximate — never visible
-    * data without its marker or catalog.
-    *
-    * The error rows here and the errors sinks are derived from the SAME
-    * validity predicates, so the response and the audit trail cannot
-    * disagree (the documented facade contract). */
-  def processTypedBatchFused(batch: DataFrame, storeDir: String,
-      batchId: Long, minTs: Long, maxTs: Long,
-      rollup: Boolean = true,
+    * Ordering (the crash contract): numeric rows staged hidden in
+    * `metrics_full/.staging-<id>` → errors sinks → string arm (catalog,
+    * then `metrics_string`) → `onDirtyDays` callback (the facade's
+    * durable marker write) → numeric catalog → ONE atomic rename unhides
+    * the batch → re-roll. A crash anywhere leaves either nothing visible,
+    * or markers/catalog that over-approximate — never visible data
+    * without its marker or catalog. A crashed attempt's leaked stage is
+    * invisible and is replaced by the next retry of the same batch id
+    * (the facade's ids are body-hashed). */
+  def commitTypedPost(spark: SparkSession, post: TypedPost, storeDir: String,
+      batchId: Long, rollup: Boolean = true,
       virginHint: Option[Boolean] = None,
-      onDirtyDays: Seq[Long] => Unit = _ => ()): FusedIngestResult = {
-    val spark = batch.sparkSession
+      onDirtyDays: Seq[Long] => Unit = _ => ()): Seq[Long] = {
+    if (post.nTotal == 0) return Nil
     val virgin = virginHint.getOrElse(!storeHasData(spark, storeDir))
-    val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // request-sized planning confs: the facade routes through a dedicated
-    // pinned session (newIngestSession) so nothing reader-shared is ever
-    // mutated; the set/restore fallback remains ONLY for callers whose
-    // batch is bound to a session they own end-to-end (streaming
-    // foreachBatch micro-batch frames)
-    val pinned = isPinnedIngestSession(spark)
-    val aqeBefore =
-      if (pinned) null else spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val shufBefore =
-      if (pinned) null else spark.conf.get("spark.sql.shuffle.partitions")
-    val discBefore = if (pinned) null else spark.conf.get(
-      "spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
-    if (!pinned) {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
-      spark.conf.set(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
+    Instrumentation.global.inc("ingest.batches")
+    def byDay(rows: Seq[(Long, InternalRow)]) =
+      rows.groupBy(_._1).toSeq.sortBy(_._1)
+        .map { case (d, rs) => (s"ts_day=$d", rs.map(_._2)) }
+    val (stage, target) = LocalParquet.batchDirs(s"$storeDir/metrics_full", batchId)
+    if (post.numeric.nonEmpty)
+      LocalParquet.stage(spark, stage, TypedPost.NumericSchema, byDay(post.numeric))
+    // errors sinks per arm, written only when rejects exist (empty
+    // parquet dirs would break the sinks' schema inference)
+    if (post.numericRejects.nonEmpty) {
+      Instrumentation.global.inc("ingest.rows.errors", post.numericRejects.size)
+      LocalParquet.writeBatch(spark, s"$storeDir/metrics_errors", batchId,
+        TypedPost.NumericSchema, Seq("" -> post.numericRejects))
     }
-    try {
-      val isStr = coalesce(col("is_string_typed") || col("is_bool"), lit(false))
-      val vn = validExpr(col("value_num"), minTs, maxTs)
-      val vs = validExpr(col("value"), minTs, maxTs)
-      // first failing constraint per record — the reference's
-      // bean-validation order (JSONMetric.java:24-41)
-      val src = when(col("metric_name").isNull ||
-          length(col("metric_name")) === 0, lit("metricName"))
-        .when(col("value").isNull ||
-          (!isStr && col("value_num").isNull), lit("metricValue"))
-        .when(col("ts_ms").isNull || !col("ts_ms").between(minTs, maxTs),
-          lit("collectionTime"))
-        .when(col("ttl_seconds").isNotNull && col("ttl_seconds") <= 0,
-          lit("ttlInSeconds"))
-      val unitCol = if (cached.columns.contains("unit")) col("unit")
-                    else lit(null).cast("string")
-      val obs = org.apache.spark.sql.Observation(
-        s"typed_${batchId}_${java.util.UUID.randomUUID()}")
-      val stage = new org.apache.hadoop.fs.Path(
-        s"$storeDir/metrics_full/.staging-$batchId")
-      val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val targetPath = new org.apache.hadoop.fs.Path(
-        s"$storeDir/metrics_full/batch_id=$batchId")
-      val isReplay = fs.exists(targetPath)
-      cached.observe(obs,
-          count(lit(1)).as("n_total"),
-          count(when(!isStr && vn, lit(1))).as("n_valid_num"),
-          count(when(!isStr && !vn, lit(1))).as("n_invalid_num"),
-          count(when(isStr && vs, lit(1))).as("n_valid_str"),
-          count(when(isStr && !vs, lit(1))).as("n_invalid_str"),
-          collect_set(when(!isStr && vn, dayOf(col("ts_ms")))).as("days"),
-          collect_set(when(!isStr && vn, struct(col("tenant_id"),
-            col("metric_name"), unitCol.as("unit")))).as("num_locs"),
-          collect_set(when(isStr && vs, struct(col("tenant_id"),
-            col("metric_name"), unitCol.as("unit")))).as("str_locs"),
-          collect_list(when(src.isNotNull, struct(col("tenant_id"),
-            col("metric_name"), src.as("src"), col("ts_ms")))).as("errs"))
-        .filter(!isStr && vn)
-        .select(col("tenant_id"), col("metric_name"), col("ts_ms"),
-          col("value_num").as("value"), col("ttl_seconds"), col("unit"))
-        .coalesce(1)
-        .withColumn("ts_day", dayOf(col("ts_ms")))
-        .write.mode("overwrite")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .partitionBy("ts_day").parquet(stage.toString)
-      val m = obs.get
-      def n(k: String) = m(k).asInstanceOf[Long]
-      def locsOf(k: String) = m(k).asInstanceOf[scala.collection.Seq[Any]]
-        .map { a =>
-          val r = a.asInstanceOf[org.apache.spark.sql.Row]
-          (r.getString(0), r.getString(1),
-            if (r.isNullAt(2)) null else r.getString(2))
-        }
-      val nTotal = n("n_total")
-      def discardStage(): Unit = {
-        fs.delete(stage, true)
-        val parent = stage.getParent
-        if (fs.exists(parent) && fs.listStatus(parent).isEmpty)
-          fs.delete(parent, false)
-        ()
-      }
-      if (nTotal == 0) { discardStage(); return FusedIngestResult(Nil, Array.empty, 0L) }
-      Instrumentation.global.inc("ingest.batches")
-      val errors = m("errs").asInstanceOf[scala.collection.Seq[Any]].map { a =>
-        val r = a.asInstanceOf[org.apache.spark.sql.Row]
-        (Option(r.getString(0)).getOrElse(""),
-          Option(r.getString(1)).getOrElse(""), r.getString(2),
-          if (r.isNullAt(3)) None else Some(r.getLong(3)))
-      }.toArray
-      // errors sinks per arm, written only when rejects exist (empty
-      // parquet dirs would break the sinks' schema inference)
-      if (n("n_invalid_num") > 0) {
-        Instrumentation.global.inc("ingest.rows.errors", n("n_invalid_num"))
-        cached.filter(!isStr && !vn)
-          .select(col("tenant_id"), col("metric_name"), col("ts_ms"),
-            col("value_num").as("value"), col("ttl_seconds"), col("unit"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/metrics_errors/batch_id=$batchId")
-      }
-      if (n("n_invalid_str") > 0) {
-        Instrumentation.global.inc("ingest.rows.errors.string",
-          n("n_invalid_str"))
-        cached.filter(isStr && !vs)
-          .select(col("tenant_id"), col("metric_name"), col("ts_ms"),
-            col("value").as("value_str"), col("ttl_seconds"), col("unit"),
-            col("is_bool"))
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/metrics_string_errors/batch_id=$batchId")
-      }
-      // string arm (rare on metric POSTs): catalog-before-data, same as
-      // the classic path
-      if (n("n_valid_str") > 0) {
-        Instrumentation.global.inc("ingest.rows.metrics_string",
-          n("n_valid_str"))
-        writeCatalogLocators(spark, storeDir, batchId, "string",
-          dedupLocators("string", locsOf("str_locs")), markComplete = virgin)
-        cached.filter(isStr && vs)
-          .select(col("tenant_id"), col("metric_name"), col("ts_ms"),
-            col("value").as("value_str"), col("ttl_seconds"), col("unit"),
-            col("is_bool"))
-          .coalesce(1)
-          .withColumn("ts_day", dayOf(col("ts_ms")))
-          .write.mode("overwrite").partitionBy("ts_day")
-          .parquet(s"$storeDir/metrics_string/batch_id=$batchId")
-      }
-      val days = m("days").asInstanceOf[scala.collection.Seq[Any]]
-        .map(_.asInstanceOf[Long]).toSeq
-      if (n("n_valid_num") == 0) {
-        discardStage()
-        return FusedIngestResult(Nil, errors, nTotal)
-      }
-      // durable dirty-day markers BEFORE anything becomes visible
-      onDirtyDays(days)
-      // catalog BEFORE the data unhides; the string arm (when present)
-      // already wrote the coverage marker for a virgin store
-      writeCatalogLocators(spark, storeDir, batchId, "numeric",
-        dedupLocators("basic", locsOf("num_locs")),
-        markComplete = virgin && n("n_valid_str") == 0)
-      if (isReplay) fs.delete(targetPath, true)
-      require(fs.rename(stage, targetPath),
-        s"raw batch commit rename failed for $targetPath")
-      Instrumentation.global.inc("ingest.rows.metrics_full", n("n_valid_num"))
-      if (rollup) rollDirtyDays(spark, storeDir, days.toArray)
-      FusedIngestResult(days, errors, nTotal)
-    } finally {
-      if (!pinned) {
-        spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
-        spark.conf.set("spark.sql.shuffle.partitions", shufBefore)
-        spark.conf.set(
-          "spark.sql.sources.parallelPartitionDiscovery.threshold", discBefore)
-      }
-      cached.unpersist()
-      ()
+    if (post.stringRejects.nonEmpty) {
+      Instrumentation.global.inc("ingest.rows.errors.string",
+        post.stringRejects.size)
+      LocalParquet.writeBatch(spark, s"$storeDir/metrics_string_errors",
+        batchId, TypedPost.StringSchema, Seq("" -> post.stringRejects))
     }
+    // string arm (rare on metric POSTs): catalog before data
+    if (post.strings.nonEmpty) {
+      Instrumentation.global.inc("ingest.rows.metrics_string", post.strings.size)
+      writeCatalogLocators(spark, storeDir, batchId, "string",
+        dedupLocators("string", post.strings.map(r => TypedPost.locator(r._2))),
+        markComplete = virgin)
+      LocalParquet.writeBatch(spark, s"$storeDir/metrics_string", batchId,
+        TypedPost.StringSchema, byDay(post.strings))
+    }
+    if (post.numeric.isEmpty) return Nil
+    val days = post.numeric.map(_._1).distinct
+    // durable dirty-day markers BEFORE anything becomes visible
+    onDirtyDays(days)
+    // catalog BEFORE the data unhides; the string arm (when present)
+    // already wrote the coverage marker for a virgin store
+    writeCatalogLocators(spark, storeDir, batchId, "numeric",
+      dedupLocators("basic", post.numeric.map(r => TypedPost.locator(r._2))),
+      markComplete = virgin && post.strings.isEmpty)
+    LocalParquet.commit(stage.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      stage, target)
+    Instrumentation.global.inc("ingest.rows.metrics_full", post.numeric.size)
+    if (rollup) rollDirtyDays(spark, storeDir, days.toArray)
+    days
   }
 
   /** Maintain the persisted locator catalog — the reference's
@@ -491,20 +360,8 @@ object IngestStream {
   private def writeCatalog(rows: DataFrame, storeDir: String, batchId: Long,
       src: String, familyCol: org.apache.spark.sql.Column,
       markComplete: Boolean = false,
-      rowCountHint: Option[Long] = None,
-      locatorsHint: Option[Array[(String, String, String, String)]] = None)
-      : Unit = {
+      rowCountHint: Option[Long] = None): Unit = {
     val spark = rows.sparkSession
-    // a caller that already holds the batch's distinct locators (the
-    // facade's fused accounting / the observe-on-write path) skips the
-    // per-batch catalog aggregate entirely — zero Spark jobs unless fresh
-    // locators actually need writing
-    locatorsHint match {
-      case Some(locs) =>
-        writeCatalogLocators(spark, storeDir, batchId, src, locs, markComplete)
-        return
-      case None =>
-    }
     val unitCol = if (rows.columns.contains("unit")) col("unit")
                   else lit(null).cast("string")
     val distinctLoc = rows.select(col("tenant_id"), col("metric_name"),
@@ -527,6 +384,10 @@ object IngestStream {
     if (markComplete) markCatalogComplete(spark, storeDir)
   }
 
+  private val catalogSchema = StructType(
+    Seq("tenant_id", "metric_name", "family", "unit")
+      .map(StructField(_, StringType)))
+
   /** Memo-filtered catalog upsert from driver-held locator rows
     * (tenant, name, family, unit) — the tail of [[writeCatalog]]'s memo
     * path, callable directly when the batch's distinct locators were
@@ -548,11 +409,13 @@ object IngestStream {
       _ => java.util.concurrent.ConcurrentHashMap.newKeySet())
     val fresh = locs.filterNot(seen.contains)
     if (fresh.nonEmpty) {
-      import spark.implicits._
-      fresh.toSeq.toDF("tenant_id", "metric_name", "family", "unit")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(s"$storeDir/metric_catalog/src=$src/batch_id=$batchId")
+      // the rows are already on the driver: written there, no Spark job
+      def u(v: String) = org.apache.spark.unsafe.types.UTF8String.fromString(v)
+      LocalParquet.writeBatch(spark,
+        s"$storeDir/metric_catalog/src=$src", batchId, catalogSchema,
+        Seq("" -> fresh.toSeq.map { case (t, n, f, un) =>
+          InternalRow(u(t), u(n), u(f), u(un))
+        }))
       // record ONLY after the commit; stop admitting past the cap
       if (seen.size() < CatalogMemoCap) fresh.foreach(seen.add)
     }
@@ -827,12 +690,10 @@ object IngestStream {
   def processBatch(batch: DataFrame, storeDir: String, batchId: Long = 0L,
       meterBatch: Boolean = true, virginHint: Option[Boolean] = None,
       rollup: Boolean = true,
-      statsHint: Option[Array[(Boolean, Option[Long], Long)]] = None,
-      locatorsHint: Option[Array[(String, String, String, String)]] = None,
       fuseObserve: Boolean = false)
       : Seq[Long] = {
     val spark = batch.sparkSession
-    if (fuseObserve && statsHint.isEmpty)
+    if (fuseObserve)
       return processBatchFused(batch, storeDir, batchId, meterBatch,
         virginHint, rollup)
     // probed BEFORE any write (see processTypedBatch): first-batch-on-
@@ -849,11 +710,11 @@ object IngestStream {
       // count is the latency floor of a synchronous ingest request. An
       // invalid row can carry a null ts_ms — its day groups as null, read
       // via isNullAt.
-      val stats = statsHint.getOrElse(cached
+      val stats = cached
         .groupBy(col("valid"), dayOf(col("ts_ms")).as("ts_day")).count()
         .collect()
         .map(r => (r.getBoolean(0),
-          if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getLong(2))))
+          if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getLong(2)))
       if (stats.isEmpty) return Nil
       // meterBatch=false when processTypedBatch already counted this batch
       // (a string-only batch never reaches this arm's counter otherwise)
@@ -880,8 +741,7 @@ object IngestStream {
       // missing a live locator (readers dedup; routeKind would misroute)
       writeCatalog(valid, storeDir, batchId, src = "numeric",
         familyCol = lit("basic"), markComplete = virgin,
-        rowCountHint = Some(dayCounts.map(_._2).sum),
-        locatorsHint = locatorsHint)
+        rowCountHint = Some(dayCounts.map(_._2).sum))
       writeRaw(valid, storeDir, batchId)
       Instrumentation.global.inc("ingest.rows.metrics_full",
         dayCounts.map(_._2).sum)
@@ -889,26 +749,6 @@ object IngestStream {
       dayCounts.map(_._1).toSeq
     } finally cached.unpersist()
   }
-
-  /** Pre-computed per-batch accounting (the facade's fused aggregate):
-    * `numericStats` = (valid, day, count) rows over the NUMERIC arm —
-    * exactly what [[processBatch]]'s own aggregate would produce (valid
-    * per [[validExpr]] over `value_num`; day null for a null ts_ms) —
-    * and `stringStats` = valid→count over the string/bool arm. Supplying
-    * it removes two accounting jobs from every synchronous ingest
-    * request; correctness requires the producer to use [[validExpr]]
-    * with the SAME bounds it passes to [[processTypedBatch]].
-    *
-    * `numericLocators`/`stringLocators`: the VALID rows' distinct
-    * (tenant, name, unit) triples per arm, when the producer's aggregate
-    * also collected them — supplying these removes the per-arm catalog
-    * collect job too (the catalog upsert becomes pure driver-side memo
-    * arithmetic plus, rarely, a tiny write of fresh locators). */
-  final case class TypedAccounting(
-      numericStats: Array[(Boolean, Option[Long], Long)],
-      stringStats: Map[Boolean, Long],
-      numericLocators: Option[Array[(String, String, String)]] = None,
-      stringLocators: Option[Array[(String, String, String)]] = None)
 
   /** Observe-fused batch processing — the whole per-batch accounting
     * (valid/invalid counts, dirty-day set, distinct catalog locators)
@@ -950,7 +790,7 @@ object IngestStream {
     // (a 32-way exchange is 32 scheduled tasks per stage for a few
     // thousand rows — one reducer keeps every stage a single task and
     // every staged write a single file; pinned-session guard as in
-    // processTypedBatchFused)
+    // processAggregatedBatchFused)
     val pinned = isPinnedIngestSession(spark)
     val aqeBefore =
       if (pinned) null else spark.conf.get("spark.sql.adaptive.enabled", "true")
@@ -1071,7 +911,7 @@ object IngestStream {
     * hot path reads it: an unschema'd parquet read runs a whole Spark JOB
     * just to sample footers — the r13 steady-arm timeline's third action
     * (one scheduling round per re-roll) — and this store's layout is
-    * fixed by [[writeRaw]]/[[processTypedBatchFused]] (the two path
+    * fixed by [[writeRaw]]/[[commitTypedPost]] (the two path
     * levels `batch_id`/`ts_day` included; parquet files missing `unit`
     * read as null, which the re-roll never touches). */
   private val rawStoreSchema = StructType(Seq(
@@ -1326,19 +1166,11 @@ object IngestStream {
   private[graft] def hasParquetData(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pStr = p.toString
-    // Hadoop globs MATCH dot-dirs while Spark's discovery ignores them: a
-    // file under a hidden component (a crashed POST's leaked `.staging-*`)
-    // must not make an otherwise-empty table read as "has data" — the
-    // guarded read would fail schema inference on zero visible files, and
-    // the virgin probe would skip the catalog coverage marker (the
-    // SnapshotStore.resolve husk-guard rule, applied here too)
-    fs.exists(p) && Seq("*.parquet", "*/*.parquet", "*/*/*.parquet").exists(g =>
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(p, g)))
-        .exists(_.exists { st =>
-          !st.getPath.toString.stripPrefix(pStr).split("/").exists(c =>
-            c.startsWith(".") || c.startsWith("_"))
-        }))
+    // a file under a hidden component (a crashed POST's leaked
+    // `.staging-*`) must not make an otherwise-empty table read as "has
+    // data" — the guarded read would fail schema inference on zero visible
+    // files, and the virgin probe would skip the catalog coverage marker
+    fs.exists(p) && graft.core.SnapshotStore.hasVisibleParquet(fs, p)
   }
 
   /** Kinds actually present in a parsed statsd frame — real statsd traffic
@@ -1517,17 +1349,17 @@ object IngestStream {
     * [[rollDirtyDaysNow]], both the synchronous tail of
     * [[processAggregatedBatch]] and the background arm of its deferred
     * mode (`rollup = false`). */
-  /** [[FusedIngestResult]]'s preagg twin: dirty days, the rejected
-    * records (tenant, name, ts — the aggregated route's only constraint
-    * is the collection-time window), and the batch total. */
+  /** What a statsd POST needs back: dirty days, the rejected records
+    * (tenant, name, ts — the aggregated route's only constraint is the
+    * collection-time window), and the batch total. */
   final case class FusedPreaggResult(
       dirtyDays: Seq[Long],
       rejects: Array[(String, String, Option[Long])],
       nTotal: Long)
 
-  /** ONE-JOB aggregated (statsd) ingest — [[processTypedBatchFused]]'s
-    * discipline on the preagg route: the accounting (total, reject rows,
-    * dirty days, per-kind catalog locators) rides the staged `preagg_raw`
+  /** ONE-JOB aggregated (statsd) ingest — the typed route's crash order
+    * ([[commitTypedPost]]) on the preagg route: the accounting (total,
+    * reject rows, dirty days, per-kind catalog locators) rides the staged `preagg_raw`
     * write as observed metrics; the rejects sink runs only when rejects
     * exist; the durable dirty-day marker lands between the hidden staged
     * write and the commit rename; tiers roll after the rename

@@ -13,7 +13,9 @@ import java.util.concurrent.atomic.AtomicInteger
   * the fused observe-on-write path's whole point is the count: staged raw
   * write (with the accounting riding as observed metrics) + the dirty-day
   * 5m re-roll publish, and nothing else on a warm store. The classic path
-  * pays two more (stats aggregate + catalog collect). */
+  * pays two more (stats aggregate + catalog collect). The facade's typed
+  * POST runs no job at all: it parses, validates and writes on the
+  * driver (TypedPost, LocalParquet). */
 class SteadyJobCountSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
@@ -70,8 +72,8 @@ class SteadyJobCountSpec extends AnyFunSuite with SparkSuite {
       s"fused (${fused.size}) ran more jobs than classic (${classic.size})")
   }
 
-  test("a repeat clean deferred HTTP POST costs exactly ONE Spark job " +
-    "(the staged raw write carrying the whole accounting)") {
+  test("typed HTTP POSTs run ZERO Spark jobs (clean, 207 with rejects, " +
+    "string metric, catalog-memo miss); statsd and events stay at one") {
     val store = Files.createTempDirectory("graft_sjc_http").toString
     val now = 1704067200000L
     val srv = new graft.http.MetricsHttpServer(spark, store,
@@ -86,17 +88,33 @@ class SteadyJobCountSpec extends AnyFunSuite with SparkSuite {
           .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
           .build(),
         java.net.http.HttpResponse.BodyHandlers.ofString())
-      def body(v: Double, ts: Long) =
-        s"""[{"metricName": "app.one", "metricValue": $v,
-           |  "collectionTime": $ts}]""".stripMargin
-      // first POST pays the virgin catalog write + warms plans/memos
-      assert(post(body(1.0, now - 3600000L)).statusCode() === 200)
-      val jobs = jobSites {
-        assert(post(body(2.0, now - 3000000L)).statusCode() === 200)
+      def rec(name: String, v: String, ts: Long) =
+        s"""{"metricName": "$name", "metricValue": $v, "collectionTime": $ts}"""
+      def body(v: Double, ts: Long) = s"[${rec("app.one", v.toString, ts)}]"
+      def zeroJobs(what: String, body: String, status: Int): Unit = {
+        val jobs = jobSites {
+          val r = post(body)
+          assert(r.statusCode() === status, s"$what: ${r.body()}")
+        }
+        assert(jobs.isEmpty,
+          s"$what POST ran ${jobs.size} jobs: ${jobs.mkString(" | ")}")
       }
-      assert(jobs.size === 1,
-        s"deferred POST ran ${jobs.size} jobs: ${jobs.mkString(" | ")}")
-      // the aggregated (statsd) route holds the same one-job floor
+      // first POST seeds the store and the catalog memo
+      assert(post(body(1.0, now - 3600000L)).statusCode() === 200)
+      zeroJobs("clean", body(2.0, now - 3000000L), 200)
+      zeroJobs("207 with rejects",
+        s"[${rec("app.one", "3.0", now - 2400000L)}, " +
+          s"${rec("", "4.0", now - 2400000L)}]", 207)
+      assert(new java.io.File(s"$store/metrics_errors").exists())
+      zeroJobs("string metric",
+        s"[${rec("app.mode", "\"up\"", now - 1800000L)}]", 200)
+      assert(new java.io.File(s"$store/metrics_string").exists())
+      zeroJobs("catalog-memo miss",
+        s"[${rec("app.fresh", "5.0", now - 1200000L)}]", 200)
+      assert(spark.read.parquet(s"$store/metric_catalog")
+        .filter(col("metric_name") === "app.fresh").count() === 1)
+      assert(spark.read.parquet(s"$store/metrics_full").count() === 4)
+      // the aggregated (statsd) route still runs its staged write as one job
       def postAgg(ts: Long) = client.send(
         java.net.http.HttpRequest.newBuilder(java.net.URI.create(
             s"http://127.0.0.1:${srv.boundPort}/v2.0/t/ingest/aggregated"))
@@ -113,7 +131,7 @@ class SteadyJobCountSpec extends AnyFunSuite with SparkSuite {
       assert(aggJobs.size === 1,
         s"deferred statsd POST ran ${aggJobs.size} jobs: " +
           aggJobs.mkString(" | "))
-      // the events route too: EVERY facade ingest route is one job
+      // the events route also stays at one job
       def postEvent(ts: Long) = client.send(
         java.net.http.HttpRequest.newBuilder(java.net.URI.create(
             s"http://127.0.0.1:${srv.boundPort}/v2.0/t/events"))
